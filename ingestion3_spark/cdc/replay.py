@@ -38,6 +38,11 @@ CORPUS_FIELDS = [
     Field(4, "source", "string"),
 ]
 
+# winner sets up to this size are broadcast: the exact packed-key join in
+# late materialization and the COW split write. Larger sets take the
+# shuffle-join / single-exchange union fallback.
+BROADCAST_WINNERS_MAX = 10_000_000
+
 
 @dataclass
 class BatchStats:
@@ -67,8 +72,6 @@ class ReplayEngine:
     # LakeTable is the sandbox implementation
     table: TableAdapter
     error_dir: str | None = None
-    salted_dedup: bool = False
-    salt_buckets: int = 32
     history: list[BatchStats] = field(default_factory=list)
 
     @staticmethod
@@ -91,9 +94,9 @@ class ReplayEngine:
           ``(doc_id, seq, part, op)`` packed into one BIGINT, persist the
           ~|keys| winner set, return per-bucket counts — overlapped with
           error routing (wide scan -> tiny batch-partitioned write +
-          pruned count-back; mode knob ``I3S_WINNER_MODE``, see inline)
-          and the column-pruned per-part offsets aggregation. events_in /
-          error totals ride along as ``observe()`` metrics.
+          pruned count-back) and the column-pruned per-part offsets
+          aggregation. events_in / error totals ride along as
+          ``observe()`` metrics.
         * phase 2 (two CONCURRENT jobs): the narrow classify agg and the
           data write. The write late-materializes the wide payload:
           source scan ⋈ broadcast(winner keys) — the wide token arrays
@@ -106,21 +109,9 @@ class ReplayEngine:
         (round-1's wide dedup shuffle + DISK_ONLY spill was the scaling
         bottleneck — memory-bandwidth-bound, flat past ~8 cores).
         """
-        import time
         from concurrent import futures
 
         from pyspark.sql import Observation
-        from pyspark.storagelevel import StorageLevel
-
-        debug = os.environ.get("I3S_DEBUG_TIMING") == "1"
-        t0 = time.perf_counter()
-
-        def _t(label):
-            if debug:
-                print(
-                    f"[timing] batch={batch_id} {label}: {time.perf_counter() - t0:.2f}s",
-                    flush=True,
-                )
 
         self.check_compat(events)
         ckpt = self.table.checkpoint()
@@ -149,9 +140,9 @@ class ReplayEngine:
         observed = pending.observe(obs_err, *metric_cols)
         obs_win = Observation()
         clean = pending.observe(obs_win, *metric_cols).filter(~errp)
-        winners = winners_all = None
+        winners = None
         try:
-            with futures.ThreadPoolExecutor(max_workers=3) as pool:
+            with futures.ThreadPoolExecutor(max_workers=2) as pool:
                 # offsets job: Catalyst prunes this scan to the (part, seq)
                 # parquet column chunks — token arrays are never decoded
                 # for checkpoint bookkeeping
@@ -160,107 +151,15 @@ class ReplayEngine:
                     .agg(F.max("seq").alias("hi"))
                     .collect()
                 )
-                _t("plan built")
-                # winner-selection modes, A/B-measured (BENCH.md):
-                #  - concurrent (default): winner agg over the clean rows
-                #    (wide scan re-evaluates has_error) runs CONCURRENTLY
-                #    with error routing; error counts join the commit via a
-                #    future. Best 4N wall AND best scaling ratio — the two
-                #    wide scans overlap.
-                #  - errfirst: route errors, then a tokens-free narrow
-                #    winner scan anti-joins the error keys. Lowest TOTAL
-                #    work (best at small core counts / congested hosts).
-                #  - optimistic: winners over ALL pending concurrently +
-                #    per-errored-doc fixup (for high-error feeds).
-                mode = os.environ.get("I3S_WINNER_MODE", "concurrent")
+                # the error-routing job (if any) runs CONCURRENTLY with the
+                # winner agg (two wide scans that overlap); its per-part
+                # counts join the atomic commit via the future
                 f_err = None
-                if mode in ("errfirst", "optimistic") and self.error_dir is not None:
-                    # these modes call _route_errors (and its obs.get) up
-                    # front — check batch emptiness FIRST so a fully-
-                    # redelivered/empty batch takes the same safe early
-                    # return as the concurrent path (the offsets future is
-                    # re-awaited below; resolved futures are idempotent)
-                    if not f_offsets.result():
-                        stats = BatchStats(batch_id, 0, 0, 0, None)
-                        self.history.append(stats)
-                        return stats
-                if self.error_dir is not None and mode == "errfirst":
-                    # serial errors-first variant (A/B knob): route errors,
-                    # then winner-select over the error-excluded narrow scan
-                    err_by_part, err_keys = self._route_errors(observed, batch_id, obs_err)
-                    _t("error route")
-                    n_err = sum(d["errors"] for d in err_by_part.values())
-                    src = pending.select(key, "seq", "part", "op")
-                    if n_err:
-                        ek = err_keys.select("part", "seq")
-                        if n_err <= 5_000_000:
-                            ek = F.broadcast(ek)
-                        src = src.join(ek, ["part", "seq"], "left_anti")
-                    base_winners = dd.winner_keys_packed(
-                        src, key=key,
-                        salted=self.salted_dedup, salt_buckets=self.salt_buckets,
-                    )
-                elif self.error_dir is not None and mode == "optimistic":
-                    # optimistic winner selection runs CONCURRENTLY with
-                    # error routing: winners over ALL pending events from a
-                    # tokens-free narrow scan (no has_error evaluation),
-                    # while the batch's one wide validation scan routes
-                    # errors (observe() metrics ride on it). A doc's
-                    # optimistic winner is wrong only if that exact event
-                    # errored — the fixup below recomputes just those docs
-                    # against the (tiny) error-key set.
-                    win_src = pending.select(key, "seq", "part", "op")
-                    winners_all = dd.winner_keys_packed(
-                        win_src, key=key,
-                        salted=self.salted_dedup, salt_buckets=self.salt_buckets,
-                    ).persist(StorageLevel.MEMORY_AND_DISK)
-                    f_wall = pool.submit(winners_all.count)
-                    err_by_part, err_keys = self._route_errors(observed, batch_id, obs_err)
-                    _t("error route")
-                    n_err = sum(d["errors"] for d in err_by_part.values())
-                    f_wall.result()
-                    _t("optimistic winners")
-                    if n_err:
-                        ek = err_keys.select("part", "seq")
-                        if n_err <= 5_000_000:
-                            ek = F.broadcast(ek)
-                        good = winners_all.join(ek, ["part", "seq"], "left_anti")
-                        bad_keys = (
-                            winners_all.join(ek, ["part", "seq"], "left_semi")
-                            .select(key)
-                        )
-                        redo = dd.winner_keys_packed(
-                            win_src.join(F.broadcast(bad_keys), key, "left_semi")
-                            .join(ek, ["part", "seq"], "left_anti"),
-                            key=key,
-                            salted=self.salted_dedup, salt_buckets=self.salt_buckets,
-                        )
-                        base_winners = good.unionByName(redo)
-                    else:
-                        base_winners = winners_all
-                else:
-                    # concurrent mode (and the no-error-sink fallback):
-                    # winners over the clean rows; the error-routing job (if
-                    # any) runs in a parallel thread and its per-part counts
-                    # join the atomic commit via the future
-                    err_by_part, n_err = {}, None  # from obs
-                    if self.error_dir is not None:
-                        f_err = pool.submit(
-                            self._route_errors_counts, observed, batch_id, obs_err
-                        )
-                    base_winners = dd.winner_keys_packed(
-                        clean.select(key, "seq", "part", "op"), key=key,
-                        salted=self.salted_dedup, salt_buckets=self.salt_buckets,
-                    )
-                winners = (
-                    base_winners
-                    .withColumn("__bucket", self.table.bucket_expr())
-                    .persist(StorageLevel.MEMORY_AND_DISK)
-                )
+                if self.error_dir is not None:
+                    f_err = pool.submit(self._route_errors, observed, batch_id, obs_err)
+                winners = self._select_winners(clean)
                 bucket_rows = winners.groupBy("__bucket").count().collect()
-                _t("winners agg")
                 offset_rows = f_offsets.result()
-                _t("phase1 errors+winners+offsets")
                 if not offset_rows:
                     # fully-redelivered/empty batch: return BEFORE touching
                     # Observation.get — AQE's empty-relation propagation
@@ -272,148 +171,23 @@ class ReplayEngine:
                     return stats
                 touched = {int(r["__bucket"]) for r in bucket_rows}
                 n_winners = sum(int(r["count"]) for r in bucket_rows)
-                # metrics from the observation whose single consuming job
-                # has definitely completed in this mode
-                if n_err is not None:
-                    events_in = int(obs_err.get["events_in"] or 0)
-                elif n_winners > 0:
-                    metrics = obs_win.get
-                    events_in = int(metrics["events_in"] or 0)
-                    n_err = int(metrics["n_err"] or 0)
-                    if n_err and f_err is None:
-                        err_by_part[(batch_id, -1)] = {"errors": n_err}
-                else:
-                    # concurrent-mode poison batch: pending is non-empty but
-                    # every event failed validation, so obs_win's single
-                    # consuming job (the winner agg) ran on an empty-after-
-                    # filter plan — the same AQE empty-relation/CollectMetrics
-                    # condition as the empty-batch return above. Derive the
-                    # totals from the error-routing write (writes never
-                    # collapse) or a plain count instead of touching obs_win.
-                    if f_err is not None:
-                        err_by_part = f_err.result() or {}
-                        f_err = None
-                        metrics = obs_err.get
-                        events_in = int(metrics["events_in"] or 0)
-                        n_err = int(metrics["n_err"] or 0)
-                    else:
-                        events_in = pending.count()
-                        n_err = events_in
-                        if n_err:
-                            err_by_part[(batch_id, -1)] = {"errors": n_err}
+                events_in, n_err = self._batch_totals(
+                    pending, obs_win, obs_err, f_err, n_winners
+                )
+                # without an error sink the errors are still counted in
+                # lineage, on the batch's catch-all (batch_id, -1) row
+                err_by_part = (
+                    {(batch_id, -1): {"errors": n_err}} if n_err and f_err is None else {}
+                )
                 new_ckpt = dict(ckpt)
                 for r in offset_rows:
                     p = int(r["part"])
                     new_ckpt[p] = max(int(r["hi"]), new_ckpt.get(p, -1))
 
-                # late materialization: recover the winners' wide payload by
-                # broadcast-joining the winner (seq, part) keys back to the
-                # scan — packed into one BIGINT (see pk2 below), the match
-                # is EXACT under the feed's (part, seq)-uniqueness contract.
-                # Surviving rows per key are byte-identical duplicate
-                # re-deliveries of that key's winner (at-least-once feed),
-                # so a plain dropDuplicates([key]) — a |winners|-row First
-                # aggregation — finishes the dedup deterministically
-                # (measured 2.3x cheaper than a wide max_by, which runs in
-                # ObjectHashAggregate). Beyond the cap: shuffle join on the
-                # narrow keys (at 10^10-event scale, pair with a bucketed
-                # base layout).
-                bcast = n_winners <= int(
-                    os.environ.get("I3S_BROADCAST_WINNERS_MAX", "10000000")
-                )
-                # (seq, part) packed into one long IS the join key: the
-                # feed's (part, seq)-uniqueness contract (exact byte-
-                # identical redeliveries only) makes a single-long equi-join
-                # exact — rows matching a winner's packed (seq, part) are
-                # that winner's delivery or its redeliveries, nothing else.
-                # One 8-byte column per broadcast map entry (the driver-side
-                # build of a multi-million-entry map is SERIAL time, so
-                # every byte in it costs scaling), and the probe side is a
-                # LongHashedRelation — no per-row xxhash64, no post-filter.
-                # same per-row domain guard as packed_order: the packing is
-                # only injective while part < 2^16 and seq < 2^42
-                pk2 = (
-                    F.shiftleft(F.col("seq"), 16)
-                    + F.col("part").cast("long")
-                    + F.coalesce(
-                        F.assert_true(
-                            (F.col("part") >= 0) & (F.col("part") < F.lit(dd.PACK_PART_MAX))
-                            & (F.col("seq") >= 0) & (F.col("seq") < F.lit(dd.PACK_SEQ_MAX)),
-                            F.lit("seq/part outside pk2 packed domain "
-                                  "(seq < 2^42, part < 2^16)"),
-                        ).cast("long"),
-                        F.lit(0),
-                    )
-                )
-                # payload normalization (n_tok recompute, delete-nulling)
-                # WITHOUT message construction: every row surviving the
-                # exact winner join is clean by construction (winners are
-                # selected from clean rows and (part, seq) is unique), so
-                # the messages array would be dead weight on this scan
-                clean_norm = val.normalize_payload(clean, tuple(payload))
-                if bcast:
-                    # the packed-long match is exact ONLY under the feed's
-                    # (part, seq)-uniqueness contract; a violating feed
-                    # would attach a foreign key's payload to the winner.
-                    # I3S_DEBUG=1 re-verifies the key per joined row (one
-                    # extra broadcast string column + an assert_true) —
-                    # off on the hot path, on in the property tests.
-                    debug = os.environ.get("I3S_DEBUG", "0") == "1"
-                    wcols = [pk2.alias("_wpk")] + (
-                        [F.col(key).alias("_wkey")] if debug else []
-                    )
-                    wk = F.broadcast(winners.select(*wcols))
-                    delta = (
-                        clean_norm.select(key, "op", *payload, "seq", "part")
-                        .withColumn("_wpk", pk2)
-                        .join(wk, "_wpk", "inner")
-                        .drop("_wpk")
-                    )
-                    if debug:
-                        # folded into a KEPT column (same trick as pk2's
-                        # domain guard) — a dropped assert column would be
-                        # pruned unevaluated by Catalyst
-                        delta = delta.withColumn(
-                            "seq",
-                            F.col("seq") + F.coalesce(
-                                F.assert_true(
-                                    F.col(key) == F.col("_wkey"),
-                                    F.lit("packed (seq,part) collision: "
-                                          "joined payload key != winner key "
-                                          "— feed violates (part, seq) "
-                                          "uniqueness"),
-                                ).cast("long"),
-                                F.lit(0),
-                            ),
-                        ).drop("_wkey")
-                else:
-                    delta = clean_norm.select(key, "op", *payload, "seq", "part").join(
-                        winners.select(key, "seq", "part"),
-                        [key, "seq", "part"],
-                        "inner",
-                    )
-                if os.environ.get("I3S_ONE_EXCHANGE", "1") == "1":
-                    # one-exchange variant: repartition by the WRITE's own
-                    # bucket column first, then dedup on (bucket, key) —
-                    # hashpartitioning([__bucket]) is a subset of the
-                    # dedup's clustering keys, so Catalyst inserts NO
-                    # second exchange, and the bucketed write can take the
-                    # fanout path (~2 bucket values per task) instead of
-                    # its own full exchange of the wide payload. The
-                    # (bucket, key) groups equal the key groups because
-                    # bucket = f(key).
-                    changes = (
-                        delta.withColumn("__bucket", self.table.bucket_expr())
-                        .repartition(F.col("__bucket"))
-                        .dropDuplicates(["__bucket", key])
-                        .drop("__bucket")
-                    )
-                else:
-                    changes = delta.dropDuplicates([key])
-
+                bcast = n_winners <= BROADCAST_WINNERS_MAX
                 result = merge_batch(
                     self.table,
-                    changes,
+                    self._materialize(clean, winners, payload, bcast),
                     winners,
                     batch_id=batch_id,
                     checkpoint=new_ckpt,
@@ -424,30 +198,158 @@ class ReplayEngine:
                     clean_count=events_in - n_err,
                     n_winners=n_winners,
                 )
-                _t("merge")
             stats = BatchStats(batch_id, events_in, n_err, n_winners, result)
             self.history.append(stats)
             return stats
         finally:
             if winners is not None:
                 winners.unpersist()
-            if winners_all is not None:
-                winners_all.unpersist()
 
-    def _route_errors_counts(self, observed: DataFrame, batch_id: int, obs) -> dict:
-        """Thread target for concurrent mode: error write + per-part counts
-        only (the error-key DataFrame is not needed when winner selection
-        filters on has_error itself)."""
-        return self._route_errors(observed, batch_id, obs)[0]
+    def _select_winners(self, clean: DataFrame) -> DataFrame:
+        """Winner selection: the persisted narrow winner set ``(key, seq,
+        part, op, __bucket)``, one row per key, over the batch's clean rows.
+        Reused by the winner-count job, late materialization, classification
+        and the base anti-join without recomputing anything wide."""
+        from pyspark.storagelevel import StorageLevel
 
-    def _route_errors(self, observed: DataFrame, batch_id: int, obs) -> tuple[dict, DataFrame | None]:
+        key = self.table.key_column
+        return (
+            dd.winner_keys_packed(clean.select(key, "seq", "part", "op"), key=key)
+            .withColumn("__bucket", self.table.bucket_expr())
+            .persist(StorageLevel.MEMORY_AND_DISK)
+        )
+
+    @staticmethod
+    def _batch_totals(pending, obs_win, obs_err, f_err, n_winners: int) -> tuple[int, int]:
+        """(events_in, n_err) for a non-empty batch, read from the
+        observation whose single consuming job has definitely completed.
+
+        Poison batch (pending is non-empty but every event failed
+        validation): obs_win's consuming job (the winner agg) ran on an
+        empty-after-filter plan — the same AQE empty-relation /
+        CollectMetrics condition as the empty-batch return — so the totals
+        come from the error-routing write (writes never collapse) or, with
+        no error sink, from a plain count instead of obs_win."""
+        if n_winners > 0:
+            metrics = obs_win.get
+        elif f_err is not None:
+            f_err.result()
+            metrics = obs_err.get
+        else:
+            n = pending.count()
+            return n, n
+        return int(metrics["events_in"] or 0), int(metrics["n_err"] or 0)
+
+    def _materialize(
+        self, clean: DataFrame, winners: DataFrame, payload: list[str], bcast: bool
+    ) -> DataFrame:
+        """Late materialization: the winners' wide rows ``(key, op,
+        <payload...>, seq, part)``, one per key, hash-partitioned by the
+        write's ``__bucket`` through the batch's ONE payload exchange.
+
+        The winners' wide payload is recovered by joining the winner
+        (seq, part) keys back to the scan — broadcast and packed into one
+        BIGINT (see pk2 below) up to ``BROADCAST_WINNERS_MAX`` winners, the
+        match is EXACT under the feed's (part, seq)-uniqueness contract.
+        Surviving rows per key are byte-identical duplicate re-deliveries
+        of that key's winner (at-least-once feed), so a plain
+        dropDuplicates — a |winners|-row First aggregation — finishes the
+        dedup deterministically (measured 2.3x cheaper than a wide max_by,
+        which runs in ObjectHashAggregate). Beyond the cap: shuffle join on
+        the narrow keys (at 10^10-event scale, pair with a bucketed base
+        layout).
+        """
+        key = self.table.key_column
+        # (seq, part) packed into one long IS the join key: the feed's
+        # (part, seq)-uniqueness contract (exact byte-identical redeliveries
+        # only) makes a single-long equi-join exact — rows matching a
+        # winner's packed (seq, part) are that winner's delivery or its
+        # redeliveries, nothing else. One 8-byte column per broadcast map
+        # entry (the driver-side build of a multi-million-entry map is
+        # SERIAL time, so every byte in it costs scaling), and the probe
+        # side is a LongHashedRelation — no per-row xxhash64, no
+        # post-filter. Same per-row domain guard as packed_order: the
+        # packing is only injective while part < 2^16 and seq < 2^42
+        pk2 = (
+            F.shiftleft(F.col("seq"), 16)
+            + F.col("part").cast("long")
+            + F.coalesce(
+                F.assert_true(
+                    (F.col("part") >= 0) & (F.col("part") < F.lit(dd.PACK_PART_MAX))
+                    & (F.col("seq") >= 0) & (F.col("seq") < F.lit(dd.PACK_SEQ_MAX)),
+                    F.lit("seq/part outside pk2 packed domain "
+                          "(seq < 2^42, part < 2^16)"),
+                ).cast("long"),
+                F.lit(0),
+            )
+        )
+        # payload normalization (n_tok recompute, delete-nulling) WITHOUT
+        # message construction: every row surviving the exact winner join
+        # is clean by construction (winners are selected from clean rows
+        # and (part, seq) is unique), so the messages array would be dead
+        # weight on this scan
+        clean_norm = val.normalize_payload(clean, tuple(payload))
+        if bcast:
+            # the packed-long match is exact ONLY under the feed's
+            # (part, seq)-uniqueness contract; a violating feed would
+            # attach a foreign key's payload to the winner. I3S_DEBUG=1
+            # re-verifies the key per joined row (one extra broadcast
+            # string column + an assert_true) — off on the hot path, on in
+            # the property tests.
+            debug = os.environ.get("I3S_DEBUG", "0") == "1"
+            wcols = [pk2.alias("_wpk")] + (
+                [F.col(key).alias("_wkey")] if debug else []
+            )
+            wk = F.broadcast(winners.select(*wcols))
+            delta = (
+                clean_norm.select(key, "op", *payload, "seq", "part")
+                .withColumn("_wpk", pk2)
+                .join(wk, "_wpk", "inner")
+                .drop("_wpk")
+            )
+            if debug:
+                # folded into a KEPT column (same trick as pk2's domain
+                # guard) — a dropped assert column would be pruned
+                # unevaluated by Catalyst
+                delta = delta.withColumn(
+                    "seq",
+                    F.col("seq") + F.coalesce(
+                        F.assert_true(
+                            F.col(key) == F.col("_wkey"),
+                            F.lit("packed (seq,part) collision: "
+                                  "joined payload key != winner key "
+                                  "— feed violates (part, seq) "
+                                  "uniqueness"),
+                        ).cast("long"),
+                        F.lit(0),
+                    ),
+                ).drop("_wkey")
+        else:
+            delta = clean_norm.select(key, "op", *payload, "seq", "part").join(
+                winners.select(key, "seq", "part"),
+                [key, "seq", "part"],
+                "inner",
+            )
+        # one exchange: repartition by the WRITE's own bucket column first,
+        # then dedup on (bucket, key) — hashpartitioning([__bucket]) is a
+        # subset of the dedup's clustering keys, so Catalyst inserts NO
+        # second exchange, and the bucketed write takes the fanout path
+        # (~2 bucket values per task) instead of its own full exchange of
+        # the wide payload. The (bucket, key) groups equal the key groups
+        # because bucket = f(key).
+        return (
+            delta.withColumn("__bucket", self.table.bucket_expr())
+            .repartition(F.col("__bucket"))
+            .dropDuplicates(["__bucket", key])
+            .drop("__bucket")
+        )
+
+    def _route_errors(self, observed: DataFrame, batch_id: int, obs) -> dict:
         """Error-table write (MessageCollector report analog) + per-part
-        counts for lineage. At-least-once — ``errors_df`` dedups by (part,
-        seq). The write is partitioned by ``batch_id`` so the count-back
-        read prunes to THIS batch's files (O(batch errors), not O(all
-        errors ever written)). Returns (per-part counts keyed (batch_id,
-        part), lazy DataFrame of this batch's deduped error (part, seq)
-        keys — the winner-selection anti-join input)."""
+        counts for lineage, keyed (batch_id, part). At-least-once —
+        ``errors_df`` dedups by (part, seq). The write is partitioned by
+        ``batch_id`` so the count-back read prunes to THIS batch's files
+        (O(batch errors), not O(all errors ever written))."""
         err_by_part: dict[tuple, dict] = {}
         err_path = self._err_path()
         (
@@ -461,7 +363,7 @@ class ReplayEngine:
             .parquet(err_path)
         )
         if int(obs.get["n_err"] or 0) == 0:
-            return err_by_part, None
+            return err_by_part
         err_keys = (
             self.spark.read.parquet(err_path)
             .filter(F.col("batch_id") == batch_id)
@@ -469,7 +371,7 @@ class ReplayEngine:
         )
         for r in err_keys.groupBy("part").agg(F.count("*").alias("n")).collect():
             err_by_part[(batch_id, int(r["part"]))] = {"errors": int(r["n"])}
-        return err_by_part, err_keys
+        return err_by_part
 
     # ------------------------------------------------------------ full replay
     def replay(

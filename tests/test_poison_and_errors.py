@@ -4,9 +4,8 @@ Covers the round-3 hardening (ADVICE r2):
 - a poison batch (every event fails validation) must commit its checkpoint
   and route all events to the error table without touching the winner
   observation (AQE empty-relation / CollectMetrics crash);
-- errfirst/optimistic modes must survive an empty/fully-redelivered batch;
 - a doc whose every event carries an unknown op must NOT be phantom-deleted
-  in optimistic mode (NULL packed winner key);
+  (NULL packed winner key);
 - the v2 (batch_id-partitioned) error sink must coexist with a legacy v1
   error dir (batch_id as data column) instead of corrupting the read.
 """
@@ -14,7 +13,6 @@ Covers the round-3 hardening (ADVICE r2):
 from __future__ import annotations
 
 import pyarrow as pa
-import pytest
 
 from ingestion3_spark.cdc.generator import make_corpus, make_events
 from ingestion3_spark.cdc.oracle import diff_states, replay_oracle, table_state
@@ -47,12 +45,10 @@ def _poison_feed(n=50, n_parts=2) -> pa.Table:
     )
 
 
-@pytest.mark.parametrize("mode", ["concurrent", "errfirst", "optimistic"])
-def test_poison_batch_all_errors(spark, tmp_table_path, tmp_path, monkeypatch, mode):
+def test_poison_batch_all_errors(spark, tmp_table_path, tmp_path):
     """Non-empty batch where EVERY event fails validation: the batch must
     commit (checkpoint advances so errors are not reprocessed), all events
     land in the error table, and the base state is untouched."""
-    monkeypatch.setenv("I3S_WINNER_MODE", mode)
     base = make_corpus(30, seed=11, max_len=16)
     table = _seed_table(spark, tmp_table_path, base)
     eng = ReplayEngine(spark, table, error_dir=str(tmp_path / "err"))
@@ -73,10 +69,9 @@ def test_poison_batch_all_errors(spark, tmp_table_path, tmp_path, monkeypatch, m
     )
 
 
-def test_poison_batch_without_error_sink(spark, tmp_table_path, monkeypatch):
-    """Same poison batch, no error_dir configured (concurrent fallback):
-    metrics come from a plain count, the commit still lands."""
-    monkeypatch.delenv("I3S_WINNER_MODE", raising=False)
+def test_poison_batch_without_error_sink(spark, tmp_table_path):
+    """Same poison batch, no error_dir configured: metrics come from a
+    plain count, the commit still lands."""
     base = make_corpus(10, seed=12, max_len=16)
     table = _seed_table(spark, tmp_table_path, base)
     eng = ReplayEngine(spark, table, error_dir=None)
@@ -85,30 +80,11 @@ def test_poison_batch_without_error_sink(spark, tmp_table_path, monkeypatch):
     assert table.read().count() == 10
 
 
-@pytest.mark.parametrize("mode", ["errfirst", "optimistic"])
-def test_empty_batch_in_alt_modes(spark, tmp_table_path, tmp_path, monkeypatch, mode):
-    """Fully-redelivered batch under errfirst/optimistic: the early return
-    must fire BEFORE _route_errors touches its observation."""
-    monkeypatch.setenv("I3S_WINNER_MODE", mode)
-    base = make_corpus(50, seed=13, max_len=16)
-    events = make_events(500, n_base_docs=50, seed=13, n_parts=2, max_len=16)
-    table = _seed_table(spark, tmp_table_path, base)
-    eng = ReplayEngine(spark, table, error_dir=str(tmp_path / "err"))
-    eng.replay(_spark_df(spark, events), num_batches=1)
-    stats = eng.apply_batch(_spark_df(spark, events), batch_id=9)
-    assert stats.events_in == 0 and stats.changes == 0
-    assert not diff_states(
-        replay_oracle(base, events),
-        table_state([r.asDict() for r in table.read().collect()]),
-    )
-
-
-def test_unknown_op_doc_not_phantom_deleted(spark, tmp_table_path, tmp_path, monkeypatch):
-    """Optimistic mode selects winners over UNvalidated rows; a doc whose
-    only event has an unknown op packs to a NULL winner key. It must be
-    dropped from winner selection (all its events are error-routed), NOT
-    unpacked into a phantom delete of the doc's live base row."""
-    monkeypatch.setenv("I3S_WINNER_MODE", "optimistic")
+def test_unknown_op_doc_not_phantom_deleted(spark, tmp_table_path, tmp_path):
+    """A doc whose only event has an unknown op packs to a NULL winner key.
+    It must be dropped from winner selection (all its events are
+    error-routed), NOT unpacked into a phantom delete of the doc's live
+    base row."""
     base = make_corpus(20, seed=14, max_len=16)
     tok = pa.array([[1, 2, 3]] * 3, pa.list_(pa.int32()))
     feed = pa.table(
@@ -159,17 +135,13 @@ def test_legacy_error_dir_coexists(spark, tmp_table_path, tmp_path):
     assert os.path.exists(str(err_root / "errors_v2"))
 
 
-@pytest.mark.parametrize("mode", ["concurrent", "errfirst", "optimistic"])
-def test_null_op_routes_to_errors_not_dropped(
-    spark, tmp_table_path, tmp_path, monkeypatch, mode
-):
+def test_null_op_routes_to_errors_not_dropped(spark, tmp_table_path, tmp_path):
     """NULL op must classify as an unknown-op ERROR (round-3 advisory): the
     old three-valued error_predicate() made filter(pred) and filter(~pred)
     BOTH drop the row — it vanished silently while the checkpoint advanced
     past its seq, and clean_count overcounted. Now the predicate is
     NULL-definite: the row lands in the error table, the event/error
     counters reconcile, and the doc's base row is untouched."""
-    monkeypatch.setenv("I3S_WINNER_MODE", mode)
     base = make_corpus(20, seed=17, max_len=16)
     tok = pa.array([[5, 6], None, [7, 8]], pa.list_(pa.int32()))
     feed = pa.table(

@@ -8,12 +8,17 @@ n_tok, null-token errors).
 
 from __future__ import annotations
 
+import re
+
 import pyarrow as pa
 import pytest
 
+from ingestion3_spark.cdc import replay
 from ingestion3_spark.cdc.generator import make_corpus, make_events
+from ingestion3_spark.cdc.merge import lineage_df
 from ingestion3_spark.cdc.oracle import diff_states, replay_oracle, table_state
 from ingestion3_spark.cdc.replay import ReplayEngine
+from ingestion3_spark.cdc.validate import error_predicate
 from ingestion3_spark.lakehouse.table import LakeTable
 
 
@@ -110,11 +115,12 @@ def test_empty_base_bootstrap(spark, tmp_table_path, tmp_path):
 
 
 def test_skewed_feed(spark, tmp_table_path, tmp_path):
-    """Zipf hot-key feed with salted dedup enabled."""
+    """Zipf hot-key feed: winner selection's map-side partial aggregate
+    absorbs the hot keys, no salting needed."""
     base = make_corpus(200, seed=3, max_len=32)
     events = make_events(3000, n_base_docs=200, seed=3, n_parts=4, max_len=32, skew=True)
     table = _seed_table(spark, tmp_table_path, base, num_buckets=4)
-    eng = ReplayEngine(spark, table, error_dir=str(tmp_path / "err"), salted_dedup=True)
+    eng = ReplayEngine(spark, table, error_dir=str(tmp_path / "err"))
     eng.replay(_spark_df(spark, events), num_batches=2)
     _assert_state_matches(table, replay_oracle(base, events))
 
@@ -131,3 +137,82 @@ def test_lineage_reconciliation(spark, tmp_table_path, tmp_path, fixtures):
         )
     # invalid deletes were classified, not applied
     assert sum(s.merge.counts["invalid_deletes"] for s in stats) > 0
+
+
+@pytest.mark.parametrize("merge_mode", ["cow", "mor"])
+def test_huge_winner_fallback(spark, tmp_path, fixtures, monkeypatch, merge_mode):
+    """Winner sets above BROADCAST_WINNERS_MAX take the shuffle-join late
+    materialization and, on COW, the single-exchange union write. With the
+    cap at 0 (and implicit broadcasts off, so the joins really shuffle) a
+    multi-batch replay must still reach the oracle state, and each batch's
+    lineage must reconcile with its events and errors."""
+    monkeypatch.setattr(replay, "BROADCAST_WINNERS_MAX", 0)
+    planned = []
+    real_merge = replay.merge_batch
+
+    def spy(*args, **kwargs):
+        planned.append(kwargs["broadcast_winners"])
+        return real_merge(*args, **kwargs)
+
+    monkeypatch.setattr(replay, "merge_batch", spy)
+    base, events = fixtures
+    table = ReplayEngine.create_table(
+        spark, str(tmp_path / "t"), num_buckets=8, merge_mode=merge_mode
+    )
+    table.commit("append", add_files=table.write_files(_spark_df(spark, base)))
+    eng = ReplayEngine(spark, table, error_dir=str(tmp_path / "err"))
+    threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        stats = eng.replay(_spark_df(spark, events), num_batches=3)
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+
+    assert planned == [False] * len(stats) and len(stats) == 3
+    _assert_state_matches(table, replay_oracle(base, events))
+    lineage = lineage_df(table).collect()
+    errors = eng.errors_df().collect()
+    for s in stats:
+        rows = [r for r in lineage if r["batch_id"] == s.batch_id]
+        applied = sum(
+            r["inserts"] + r["updates"] + r["deletes"] + r["invalid_deletes"]
+            + r["dedup_dropped"]
+            for r in rows
+        )
+        assert applied == s.events_in - s.errors
+        assert sum(r["errors"] for r in rows) == sum(
+            1 for e in errors if e["batch_id"] == s.batch_id
+        )
+        if merge_mode == "cow":
+            assert s.merge.rows_after == (
+                s.merge.rows_before + s.merge.counts["inserts"] - s.merge.counts["deletes"]
+            )
+
+
+def _hash_exchanges(df) -> list[str]:
+    """Partitioning keys of every hash exchange in the plan, outermost first."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return [
+        re.sub(r"#\d+L?", "", keys)
+        for keys in re.findall(r"Exchange hashpartitioning\(([^()]*), \d+\)", plan)
+    ]
+
+
+def test_late_materialization_one_payload_exchange(spark, tmp_table_path, fixtures):
+    """The late-materialized changes cross exactly ONE exchange, hash-
+    partitioned on the write's ``__bucket``: dropDuplicates([__bucket, key])
+    is satisfied by that clustering, so the wide payload is never shuffled a
+    second time. The only other exchange is the narrow winner agg's, inside
+    the persisted winner set."""
+    base, events = fixtures
+    table = _seed_table(spark, tmp_table_path, base)
+    eng = ReplayEngine(spark, table)
+    clean = _spark_df(spark, events).filter(~error_predicate())
+    payload = [c for c in table.column_names() if c != table.key_column]
+    winners = eng._select_winners(clean)
+    try:
+        changes = eng._materialize(clean, winners, payload, bcast=True)
+        assert _hash_exchanges(winners) == ["doc_id"]
+        assert _hash_exchanges(changes) == ["__bucket", "doc_id"]
+    finally:
+        winners.unpersist()
